@@ -108,6 +108,7 @@ def event_micros(df: DataFrame, ts_col: str = "ts") -> Column:
 
 
 MATERIALIZE_CONF = "spark.geniepool.materialize"
+MATERIALIZE_MODES = ("localCheckpoint", "persist", "off")
 
 
 def _materialize(df: DataFrame, eager: bool) -> DataFrame:
@@ -125,6 +126,8 @@ def _materialize(df: DataFrame, eager: bool) -> DataFrame:
     - ``off``: no barrier at all (every consumer replays the
       lineage — the pre-materialization plan, for A/B measurement).
 
+    Any other value raises ``ValueError`` at the first barrier.
+
     Used via ``DataFrame.transform`` so call sites stay chainable:
     ``df.transform(ckpt_lazy)`` / ``df.transform(ckpt_eager)``.
     Eagerness only applies to the checkpoint mode; ``persist`` is
@@ -135,6 +138,11 @@ def _materialize(df: DataFrame, eager: bool) -> DataFrame:
         mode = df.sparkSession.conf.get(MATERIALIZE_CONF, mode)
     except Exception:  # noqa: BLE001 — conf probe must not break plans
         pass
+    if mode not in MATERIALIZE_MODES:
+        raise ValueError(
+            f"{MATERIALIZE_CONF}={mode!r}: expected one of "
+            + ", ".join(MATERIALIZE_MODES)
+        )
     if mode == "off":
         return df
     if mode == "persist":
@@ -186,12 +194,12 @@ def fan_out_if_narrow(df: DataFrame) -> DataFrame:
             return df
         if len(files) >= target:
             return df
-        max_pb = int(
-            df.sparkSession.conf.get(
-                "spark.sql.files.maxPartitionBytes", "134217728"
-            ).rstrip("b")
-        )
         jvm = sc._jvm
+        # a size string ('128m', '1g', '134217728') → bytes, as Spark
+        # parses it
+        max_pb = jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            df.sparkSession.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+        )
         conf = sc._jsc.hadoopConfiguration()
         splits = 0
         for f in files:

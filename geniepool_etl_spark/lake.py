@@ -9,18 +9,24 @@ task group (no small-file explosion at 1000 executors).
 
 The serving-side contract is ``read_range``: a genomic point/range
 query must touch only the partition directories its positions can live
-in. Partition pruning on ``chrom`` is free; for ``pos`` ranges the
-reader derives the covering ``pos_bucket`` ids arithmetically and adds
-a ``pos_bucket IN (...)`` literal filter, which Spark prunes at file
-listing time (SURVEY.md §4 "partition pruning").
+in. The reader derives the covering ``pos_bucket`` ids arithmetically,
+finds which ``chrom=<c>/pos_bucket=<b>`` directories exist with one
+Hadoop glob, and hands only those to Spark; the schema comes from one
+of their parquet footers, read on the driver. No whole-lake listing
+and no Spark job happen before the query runs. The ``chrom`` /
+``pos_bucket IN (...)`` / ``pos BETWEEN`` filter stays on the frame, so
+the plan still shows its PartitionFilters (SURVEY.md §4 "partition
+pruning").
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StringType, StructType
 
 from geniepool_etl_spark.config import MAX_RECORDS_PER_FILE, PARTITION_SIZE
 
@@ -78,6 +84,74 @@ def buckets_for_range(
     return list(range(pos_lo // partition_size, pos_hi // partition_size + 1))
 
 
+def _covering_files(spark: SparkSession, lake_path: str, chrom: str,
+                    buckets: list[int]) -> list:
+    """``(path, FileStatus)`` of every parquet file in the covering
+    ``chrom=<c>/pos_bucket=<b>`` directories, sorted by path: one Hadoop
+    ``globStatus`` that lists only those directories. ``chrom`` is
+    escaped exactly as Spark's writer names the directory."""
+    if not buckets:
+        return []
+    jvm = spark._jvm
+    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(chrom)
+    ids = ",".join(map(str, buckets))
+    pattern = jvm.org.apache.hadoop.fs.Path(
+        lake_path, f"chrom={esc}/pos_bucket={{{ids}}}/*.parquet"
+    )
+    fs = pattern.getFileSystem(spark._jsc.hadoopConfiguration())
+    return sorted((st.getPath().toString(), st) for st in fs.globStatus(pattern) or [])
+
+
+def _any_partition_file(spark: SparkSession, lake_path: str) -> list:
+    """``(path, FileStatus)`` of the first parquet file met in any
+    ``chrom=*/pos_bucket=*`` directory of the lake (``[]`` when there is
+    none). The recursive listing is lazy and stops at that file."""
+    jvm = spark._jvm
+    root = jvm.org.apache.hadoop.fs.Path(lake_path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return []
+    root = fs.makeQualified(root)
+    files = fs.listFiles(root, True)
+    while files.hasNext():
+        st = files.next()
+        bucket = st.getPath().getParent()
+        if (
+            st.getPath().getName().endswith(".parquet")
+            and bucket.getName().startswith("pos_bucket=")
+            and bucket.getParent().getName().startswith("chrom=")
+            and bucket.getParent().getParent().equals(root)
+        ):
+            return [(st.getPath().toString(), st)]
+    return []
+
+
+def _footer_schema(spark: SparkSession, status) -> StructType:
+    """The lake schema from one file's footer, converted by Spark's own
+    ``readSchemaFromFooter`` (the one-footer rule Spark's inference
+    applies under ``mergeSchema=false``), plus the partition columns."""
+    jvm = spark._jvm
+    parquet = jvm.org.apache.parquet
+    meta = parquet.hadoop.ParquetFileReader.readFooter(
+        parquet.hadoop.util.HadoopInputFile.fromStatus(
+            status, spark._jsc.hadoopConfiguration()
+        ),
+        parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    fmt = jvm.org.apache.spark.sql.execution.datasources.parquet
+    converter = fmt.ParquetToSparkSchemaConverter(
+        spark._jsparkSession.sessionState().conf()
+    )
+    data = fmt.ParquetFileFormat.readSchemaFromFooter(
+        parquet.hadoop.Footer(status.getPath(), meta), converter
+    )
+    return (
+        StructType.fromJson(json.loads(data.json()))
+        .add("chrom", StringType())
+        .add("pos_bucket", IntegerType())
+    )
+
+
 def read_range(
     spark: SparkSession,
     lake_path: str,
@@ -92,14 +166,40 @@ def read_range(
     T:93-95 / T:118-122, with the bucket arithmetic the GeniePool
     serving layer performs done here).
 
-    The emitted plan lists only ``chrom=<c>/pos_bucket=<b>``
-    directories — verified by PartitionFilters in ``.explain``.
+    Building the frame costs what the query touches:
+
+    - One Hadoop glob finds which covering ``chrom=<c>/pos_bucket=<b>``
+      directories exist; only those are read (``basePath`` = the lake,
+      so ``chrom``/``pos_bucket`` stay columns). The rest of the lake
+      is never listed.
+    - The schema is one covering file's footer, converted on the driver
+      by Spark's own footer-to-schema code, with ``chrom STRING`` and
+      ``pos_bucket INT`` appended; no inference job runs. Under
+      ``spark.sql.parquet.mergeSchema=true`` Spark infers the merged
+      schema itself, over the covering directories only.
+    - When the chromosome or every covering bucket is absent, any one
+      partition directory of the lake is read instead; the filter
+      empties it, so the result is empty and keeps the lake's schema.
+
+    The ``chrom`` / ``pos_bucket IN`` / ``pos BETWEEN`` filter stays, so
+    ``.explain`` still shows PartitionFilters. Unlike ``read_datalake``,
+    ``chrom`` is always STRING, also in a lake whose chromosome names
+    all look like integers (where Spark's partition inference says INT).
     ``order_by_pos`` adds the serving-side ``orderBy("pos")`` the
     reference's read-back queries apply (T:93-95); it stays opt-in
     because a global sort is an extra exchange the caller may not need.
     """
     buckets = buckets_for_range(pos_lo, pos_hi, partition_size)
-    df = read_datalake(spark, lake_path)
+    files = _covering_files(spark, lake_path, chrom, buckets) or _any_partition_file(
+        spark, lake_path
+    )
+    reader = spark.read.option("basePath", lake_path)
+    merge = spark.conf.get("spark.sql.parquet.mergeSchema", "false")
+    if files and merge.lower() != "true":
+        reader = reader.schema(_footer_schema(spark, files[0][1]))
+    # an empty or missing lake falls through to Spark's own error
+    dirs = sorted({path.rsplit("/", 1)[0] for path, _ in files})
+    df = reader.parquet(*(dirs or [lake_path]))
     out = df.where(
         (F.col("chrom") == chrom)
         & F.col("pos_bucket").isin(buckets)
