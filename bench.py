@@ -306,12 +306,8 @@ def sf10_queries(spark) -> dict:
         # word BPE) whose decade step must stay ~linear in corpus
         # size — a superlinear step would mean the distinct-key
         # domain is no longer absorbing the growth
-        # materialize=False: single-run lane; the persist pays only
-        # across repeats and its never-unpersisted corpus-scale cache
-        # inflates whatever runs after it in the session (measured:
-        # flagship 15 -> 23 s when it followed the cached form)
         "text_perplexity": lambda: TX.bigram_surprisal_scores(
-            C._t(spark, SF10_DIR, "documents"), materialize=False
+            C._t(spark, SF10_DIR, "documents")
         ),
         "text_bpe_encode": lambda: C.q_text_bpe_encode(
             spark, SF10_DIR
@@ -342,11 +338,8 @@ def sf1_queries(spark) -> dict:
         "sim_lsh_topk": lambda: S.lsh_bucket_topk(
             emb1, k=5, n_planes=None, n_rows=n_emb1
         ),
-        # materialize=True: best-of-2 re-executes the same frame;
-        # the persist pays across the repeats (library default is
-        # False for one-shot callers — the r12 advice fix)
         "text_perplexity": lambda: TX.bigram_surprisal_scores(
-            C._t(spark, SF1_DIR, "documents"), materialize=True
+            C._t(spark, SF1_DIR, "documents")
         ),
         "text_bpe_encode": lambda: C.q_text_bpe_encode(spark, SF1_DIR),
         # round-8 widening: the three remaining scale-shape families —
@@ -476,9 +469,8 @@ def bench_queries(spark, sf_dir):
         "tpch_q9": lambda: C.q_sql_tpch_q9(spark, sf_dir),
         "tpch_q21": lambda: C.q_sql_tpch_q21(spark, sf_dir),
         # round-7 second wave: LLM-pipeline additions
-        # materialize=True: headline best-of-3 repeats the frame
         "text_perplexity": lambda: TX.bigram_surprisal_scores(
-            C._t(spark, sf_dir, "documents"), materialize=True
+            C._t(spark, sf_dir, "documents")
         ),
         "dedup_semantic": lambda: C.q_dedup_semantic(spark, sf_dir),
         "text_bpe_encode": lambda: C.q_text_bpe_encode(spark, sf_dir),

@@ -21,7 +21,7 @@ timezone-proof integer math. The dtype branch lives in ONE place
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -104,6 +104,28 @@ def event_micros(df: DataFrame, ts_col: str = "ts") -> Column:
     raise TypeError(
         f"event_micros: unsupported dtype {dt} for column {ts_col!r}; "
         "expected LONG (nanos), TIMESTAMP, or TIMESTAMP_NTZ"
+    )
+
+
+def cap_hot_keys(df: DataFrame, keys: list[str], max_rows: int) -> DataFrame:
+    """Drop every row whose key (one or more columns) occurs in more
+    than ``max_rows`` rows — the hot-key cap every bucketed self-join
+    applies first. A key shared by f rows fans out f² join rows, so
+    one degenerate key (a stopword shingle, a degenerate LSH band, a
+    low-entropy embedding bucket) would otherwise dominate the job at
+    scale; a key with exactly ``max_rows`` rows is kept.
+
+    A window count over the key, not a groupBy + semi-join: it is ONE
+    pass over ``df`` (an aggregate branch would evaluate ``df``'s
+    lineage a second time), and the hash(key) exchange it introduces
+    is the partitioning the following equi-join on the key needs
+    anyway. AQE cannot split a window partition, so a hot key is one
+    task until it is dropped here.
+    """
+    return (
+        df.withColumn("_f", F.count(F.lit(1)).over(Window.partitionBy(*keys)))
+        .where(F.col("_f") <= max_rows)
+        .drop("_f")
     )
 
 

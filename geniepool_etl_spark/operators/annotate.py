@@ -4,8 +4,7 @@ Each enricher is a ``DataFrame -> DataFrame`` multi-column equi
 left-outer join (SURVEY.md §2.3 J1-J4). Join strategy is left to
 Catalyst + AQE by default: on a real cluster the Impact/Alpha tables
 are broadcast-sized while dbSNP/gnomAD at production scale are not, and
-hard-coding a broadcast would OOM the driver at 100 TB. Pass
-``hint_broadcast=True`` when the caller *knows* the dimension is small.
+hard-coding a broadcast would OOM the driver at 100 TB.
 """
 
 from __future__ import annotations
@@ -20,35 +19,19 @@ POSITION_KEY = ["chrom", "pos"]
 _BASES = ("A", "C", "G", "T")
 
 
-def _maybe_broadcast(dim: DataFrame, hint_broadcast: bool) -> DataFrame:
-    return F.broadcast(dim) if hint_broadcast else dim
-
-
-def join_impact(
-    variants: DataFrame, impact: DataFrame, hint_broadcast: bool = False
-) -> DataFrame:
+def join_impact(variants: DataFrame, impact: DataFrame) -> DataFrame:
     """variants ⟕ impact on (chrom,pos,ref,alt) — reference M:55."""
-    return variants.join(
-        _maybe_broadcast(impact, hint_broadcast), VARIANT_KEY, "left"
-    )
+    return variants.join(impact, VARIANT_KEY, "left")
 
 
-def join_dbsnp(
-    variants: DataFrame, dbsnp: DataFrame, hint_broadcast: bool = False
-) -> DataFrame:
+def join_dbsnp(variants: DataFrame, dbsnp: DataFrame) -> DataFrame:
     """variants ⟕ dbSNP on (chrom,pos,ref,alt) — reference M:56."""
-    return variants.join(
-        _maybe_broadcast(dbsnp, hint_broadcast), VARIANT_KEY, "left"
-    )
+    return variants.join(dbsnp, VARIANT_KEY, "left")
 
 
-def join_gnomad(
-    variants: DataFrame, gnomad: DataFrame, hint_broadcast: bool = False
-) -> DataFrame:
+def join_gnomad(variants: DataFrame, gnomad: DataFrame) -> DataFrame:
     """variants ⟕ gnomAD on (chrom,pos,ref,alt) — reference M:266."""
-    return variants.join(
-        _maybe_broadcast(gnomad, hint_broadcast), VARIANT_KEY, "left"
-    )
+    return variants.join(gnomad, VARIANT_KEY, "left")
 
 
 def alphamissense_score() -> F.Column:
@@ -76,9 +59,7 @@ def alphamissense_score() -> F.Column:
     return expr
 
 
-def join_alpha(
-    variants: DataFrame, alpha: DataFrame, hint_broadcast: bool = False
-) -> DataFrame:
+def join_alpha(variants: DataFrame, alpha: DataFrame) -> DataFrame:
     """variants ⟕ alpha on (chrom,pos) + CASE-select the score
     (reference M:201-234).
 
@@ -87,8 +68,6 @@ def join_alpha(
     are dropped afterwards; output = ``alphamissense`` + the variant
     columns (reference M:230 ordering).
     """
-    joined = variants.join(
-        _maybe_broadcast(alpha, hint_broadcast), POSITION_KEY, "left"
-    )
+    joined = variants.join(alpha, POSITION_KEY, "left")
     joined = joined.withColumn("alphamissense", alphamissense_score())
     return joined.select("alphamissense", *variants.columns)

@@ -9,9 +9,9 @@ Scale design (the 100 TB contract):
   nowhere.
 - **Bounded bucket width.** Hot shingles/buckets (stopword-only
   shingles, degenerate bands) are frequency-capped before the
-  self-join, which bounds the worst-case join fan-out (the classic
-  LSH skew mitigation) — on a cluster AQE skew-join splitting handles
-  the remainder.
+  self-join by the one shared cap, :func:`functions.cap_hot_keys`
+  (a window count over the join key), which bounds the worst-case
+  join fan-out (the classic LSH skew mitigation).
 - **Everything JVM-side.** Shingling, hashing (xxhash64/crc32/md5),
   min-aggregation, and band assembly are built-in expressions and
   higher-order functions; no Python in the hot path.
@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from geniepool_etl_spark import functions as GPF
 
 from geniepool_etl_spark.functions import fast_hash64, portable_hash32
+from geniepool_etl_spark.operators.text import word_ngrams, words_col
 
 HashFn = Callable[[Column, int], Column]
 
@@ -38,6 +39,17 @@ HashFn = Callable[[Column, int], Column]
 # --------------------------------------------------------------------------
 # exact dedup
 # --------------------------------------------------------------------------
+
+def _keep_min_id(df: DataFrame, key: Column, id_col: str) -> DataFrame:
+    """One row per ``key`` value — the row with the minimal
+    ``id_col`` — as a row_number window over the key partition."""
+    w = Window.partitionBy(key).orderBy(id_col)
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
 
 def exact_dedup_stats(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
@@ -72,12 +84,7 @@ def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -
     which partitions as one group — matching SQL ``GROUP BY text``
     semantics (one representative row for all NULL-text docs).
     """
-    w = Window.partitionBy(F.md5(F.col(text_col))).orderBy(id_col)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    return _keep_min_id(df, F.md5(F.col(text_col)), id_col)
 
 
 def incremental_exact_dedup(
@@ -98,12 +105,8 @@ def incremental_exact_dedup(
     is the same single md5-keyed window as :func:`exact_dedup`, and
     the anti-join reuses that hash partitioning.
     """
-    w = Window.partitionBy("_h").orderBy(id_col)
-    batch_keep = (
-        new_docs.withColumn("_h", F.md5(F.col(text_col)))
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
+    batch_keep = _keep_min_id(
+        new_docs.withColumn("_h", F.md5(F.col(text_col))), F.col("_h"), id_col
     )
     idx = corpus_index.select(F.col(hash_col).alias("_h")).distinct()
     return batch_keep.join(idx, "_h", "left_anti").drop("_h")
@@ -114,28 +117,10 @@ def incremental_exact_dedup(
 # --------------------------------------------------------------------------
 
 def shingle_array(n: int = 3, text_col: str = "text") -> Column:
-    """Distinct word n-gram shingles of a document as an array column.
-
-    Built by zipping the word array with its k-shifted copies
-    (``shingle_i = w[i] ⊕ w[i+1] ⊕ … ⊕ w[i+n-1]``) — O(len·n) work per
-    document. The obvious ``transform(starts, i -> concat_ws(slice(w,
-    i, n)))`` formulation re-slices the array per shingle (O(len²)
-    copying) and measured 4× slower at sf0.1. Narrow (no shuffle).
-    Documents shorter than ``n`` words yield zero shingles. ``zip_with``
-    pads the shorter side with null, which ``concat_ws`` skips — padded
-    tails are cut by the final ``slice`` to len-(n-1) entries.
-    """
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    z = words
-    for k in range(1, n):
-        shifted = F.slice(
-            words, k + 1, F.greatest(F.size(words) - k, F.lit(0))
-        )
-        z = F.zip_with(z, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    return F.when(
-        F.size(words) >= n,
-        F.array_distinct(F.slice(z, 1, F.size(words) - (n - 1))),
-    ).otherwise(F.array().cast("array<string>"))
+    """Distinct word n-gram shingles of a document as an array column
+    (:func:`text.word_ngrams`, distinct). Narrow (no shuffle).
+    Documents shorter than ``n`` words yield zero shingles."""
+    return word_ngrams(words_col(F.col(text_col)), n, distinct=True)
 
 
 def word_shingles(
@@ -164,18 +149,9 @@ def positioned_ngrams(
 ) -> DataFrame:
     """(id, pos, gram) rows — every word n-gram WITH its 0-based start
     position (unlike :func:`word_shingles`, which is distinct and
-    positionless). Same O(len·n) zip-shift construction, then
+    positionless). Same :func:`text.word_ngrams` construction, then
     ``posexplode`` — narrow, no shuffle."""
-    words = F.split(F.trim(F.col(text_col)), r"\s+")
-    z = words
-    for k in range(1, n):
-        shifted = F.slice(
-            words, k + 1, F.greatest(F.size(words) - k, F.lit(0))
-        )
-        z = F.zip_with(z, shifted, lambda a, b: F.concat_ws(" ", a, b))
-    grams = F.when(
-        F.size(words) >= n, F.slice(z, 1, F.size(words) - (n - 1))
-    ).otherwise(F.array().cast("array<string>"))
+    grams = word_ngrams(words_col(F.col(text_col)), n)
     return df.select(
         F.col(id_col).alias("id"), F.posexplode(grams).alias("pos", "gram")
     )
@@ -289,18 +265,10 @@ def jaccard_pairs(
         .transform(GPF.ckpt_lazy)
     )
 
-    # Frequency cap as a window count over the shingle key: one pass
-    # over the exploded shingles (a groupBy + anti-join branch would
-    # re-run the shingling a second time), and the hash(shingle)
-    # exchange it introduces is the partitioning the self-equi-join
-    # needs anyway.
-    capped = (
-        sh.withColumn(
-            "_f", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-        )
-        .where(F.col("_f") <= max_shingle_freq)
-        .drop("_f")
-        .transform(GPF.ckpt_lazy)
+    # the cap's hash(shingle) exchange is the partitioning the
+    # self-equi-join needs anyway
+    capped = GPF.cap_hot_keys(sh, ["shingle"], max_shingle_freq).transform(
+        GPF.ckpt_lazy
     )
 
     a = capped.select(F.col("id").alias("id_a"), "shingle")
@@ -404,9 +372,9 @@ def _banded_keys(
 ) -> DataFrame:
     """(id, band, key) rows from a signature frame: band identity =
     hash of the rendered signature slice (engine-portable for
-    oracles), with degenerate hot buckets frequency-capped via a
-    window count over (band, key) — one pass, reusing the exchange
-    the downstream equi-join needs anyway."""
+    oracles), with degenerate hot buckets capped on (band, key)
+    (:func:`functions.cap_hot_keys`, whose exchange the downstream
+    equi-join reuses)."""
     rows_per_band = num_perm // bands
 
     def band_key(bi: int) -> Column:
@@ -428,12 +396,33 @@ def _banded_keys(
     banded = sigs.select("id", F.explode(band_cols).alias("bk")).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key")
     )
-    return (
-        banded.withColumn(
-            "_f", F.count(F.lit(1)).over(Window.partitionBy("band", "key"))
+    return GPF.cap_hot_keys(banded, ["band", "key"], max_bucket)
+
+
+def _sig_estimate(
+    pairs: DataFrame, left: DataFrame, right: DataFrame, num_perm: int
+) -> DataFrame:
+    """Re-attach both signatures to bare id pairs and estimate the
+    Jaccard as the share of agreeing signature positions. ``left`` and
+    ``right`` are (id, sig) frames already renamed to their side's
+    columns; returns (left id, right id, est_jaccard)."""
+    (ka, sa), (kb, sb) = left.columns, right.columns
+    agree = F.size(
+        F.filter(
+            F.zip_with(F.col(sa), F.col(sb), lambda x, y: x == y),
+            lambda m: m,
         )
-        .where(F.col("_f") <= max_bucket)
-        .drop("_f")
+    )
+    return (
+        pairs.join(left, ka)
+        .join(right, kb)
+        .select(
+            ka,
+            kb,
+            F.round(agree.cast("double") / F.lit(num_perm), 4).alias(
+                "est_jaccard"
+            ),
+        )
     )
 
 
@@ -507,25 +496,13 @@ def incremental_minhash_candidates(
         .select("batch_id", "corpus_id")
         .dropDuplicates(["batch_id", "corpus_id"])
     )
-    pairs = pairs.join(
+    return _sig_estimate(
+        pairs,
         b_sigs.select(F.col("id").alias("batch_id"), F.col("sig").alias("sig_b")),
-        "batch_id",
-    ).join(
         corpus_index.select(
             F.col("id").alias("corpus_id"), F.col("sig").alias("sig_c")
         ).dropDuplicates(["corpus_id"]),
-        "corpus_id",
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_b"), F.col("sig_c"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    return pairs.select(
-        "batch_id",
-        "corpus_id",
-        F.round(agree.cast("double") / F.lit(num_perm), 4).alias("est_jaccard"),
+        num_perm,
     )
 
 
@@ -575,23 +552,11 @@ def minhash_lsh_pairs(
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    pairs = pairs.join(
+    return _sig_estimate(
+        pairs,
         sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a")),
-        "id_a",
-    ).join(
         sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b")),
-        "id_b",
-    )
-    agree = F.size(
-        F.filter(
-            F.zip_with(F.col("sig_a"), F.col("sig_b"), lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    return pairs.select(
-        "id_a",
-        "id_b",
-        F.round(agree.cast("double") / F.lit(num_perm), 4).alias("est_jaccard"),
+        num_perm,
     )
 
 
@@ -632,13 +597,7 @@ def cross_jaccard(
     )
     sizes_l = sh_l.groupBy("id_l").agg(F.count(F.lit(1)).alias("size_l"))
     sizes_r = sh_r.groupBy("id_r").agg(F.count(F.lit(1)).alias("size_r"))
-    capped_r = (
-        sh_r.withColumn(
-            "_f", F.count(F.lit(1)).over(Window.partitionBy("shingle"))
-        )
-        .where(F.col("_f") <= max_shingle_freq)
-        .drop("_f")
-    )
+    capped_r = GPF.cap_hot_keys(sh_r, ["shingle"], max_shingle_freq)
     inter = (
         sh_l.join(capped_r, "shingle")
         .groupBy("id_l", "id_r")
@@ -838,7 +797,7 @@ def simhash(
     # coalesce(text, '') so a null-text document still yields one
     # (empty) token — split(null) is a null array and explode would
     # silently drop the document from the output entirely
-    words = F.split(F.trim(F.coalesce(F.col(text_col), F.lit(""))), r"\s+")
+    words = words_col(F.coalesce(F.col(text_col), F.lit("")))
     tokens = df.select(
         F.col(id_col).alias("id"), F.explode(words).alias("_w")
     ).select("id", hash_fn(F.col("_w"), 0).alias("_h"))
@@ -865,6 +824,25 @@ def simhash(
     return bit_sums.select("id", sim.alias("simhash"))
 
 
+def _hash_bands(h: Column, bands: int, bits: int) -> Column:
+    """``array<struct<band, band_key>>``: the ``bits``-wide integer
+    hash ``h`` cut into ``bands`` equal-width bit bands (unsigned
+    shifts, so the sign bit is an ordinary top bit)."""
+    width = bits // bands
+    mask = (1 << width) - 1
+    return F.array(
+        *[
+            F.struct(
+                F.lit(bi).alias("band"),
+                F.shiftrightunsigned(h, bi * width)
+                .bitwiseAND(F.lit(mask))
+                .alias("band_key"),
+            )
+            for bi in range(bands)
+        ]
+    )
+
+
 def simhash_bands(
     df: DataFrame,
     bands: int = 4,
@@ -877,19 +855,7 @@ def simhash_bands(
     candidate-bucket key for hamming-distance near-dup search (two docs
     within hamming distance < bands share ≥1 exact band)."""
     sh = simhash(df, bits, text_col, id_col, hash_fn)
-    width = bits // bands
-    mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.shiftrightunsigned(F.col("simhash"), bi * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_key"),
-            )
-            for bi in range(bands)
-        ]
-    )
+    band_arr = _hash_bands(F.col("simhash"), bands, bits)
     return sh.select("id", F.explode(band_arr).alias("bk")).select(
         "id", F.col("bk.band").alias("band"), F.col("bk.band_key").alias("band_key")
     )
@@ -935,19 +901,7 @@ def hash_band_pairs(
     decode MapInPandas chain per execution). The (id, h) projection —
     16 B per asset, metadata-sized — is lazily materialized once
     before fan-out."""
-    width = bits // bands
-    mask = (1 << width) - 1
-    band_arr = F.array(
-        *[
-            F.struct(
-                F.lit(bi).alias("band"),
-                F.shiftrightunsigned(F.col("h"), bi * width)
-                .bitwiseAND(F.lit(mask))
-                .alias("band_key"),
-            )
-            for bi in range(bands)
-        ]
-    )
+    band_arr = _hash_bands(F.col("h"), bands, bits)
     keyed = (
         df.select(
             F.col(id_col).alias("id"), F.col(hash_col).alias("h")
@@ -961,19 +915,8 @@ def hash_band_pairs(
         )
     )
     if max_bucket is not None:
-        # one keyed count + semi-filter: buckets past the cap never
-        # enter the self-join (the candidate explosion is cut at
-        # its source, before the shuffle that would carry it)
-        sizes = keyed.groupBy("band", "band_key").agg(
-            F.count(F.lit(1)).alias("_n")
-        )
-        keyed = (
-            keyed.join(
-                sizes.where(F.col("_n") <= F.lit(max_bucket)),
-                ["band", "band_key"],
-                "left_semi",
-            )
-        )
+        # buckets past the cap never enter the self-join
+        keyed = GPF.cap_hot_keys(keyed, ["band", "band_key"], max_bucket)
     a = keyed.select(
         F.col("band"), F.col("band_key"),
         F.col("id").alias("id_a"), F.col("h").alias("h_a"),
@@ -1009,7 +952,8 @@ def near_dedup_keep(
     every document that appears in no pair.
 
     Composition of already-scale-shaped pieces: connected components
-    (:func:`dedup_clusters` — distributed label propagation), a
+    (:func:`dedup_clusters` — distributed alternating-star
+    contraction), a
     min-per-label aggregate over the (small) paired-ids set, and two
     keyed joins against the corpus — ``left_anti`` for the unpaired
     mass, ``left_semi`` for the representatives. The corpus is never

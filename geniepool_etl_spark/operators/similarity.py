@@ -283,29 +283,6 @@ def lsh_bucket(
     ).mapInArrow(bucketize, schema)
 
 
-def _cap_hot_buckets(b: DataFrame, max_bucket: int) -> DataFrame:
-    """Drop vectors in buckets wider than ``max_bucket`` before the
-    candidate self-join. Within-bucket candidate generation is
-    O(Σ|bucket|²), so one degenerate bucket (a low-entropy embedding
-    region — boilerplate docs, zero vectors) dominates the whole job at
-    scale; the cap bounds the worst-case fan-out exactly like the hot-
-    shingle cap in dedup.jaccard_pairs.
-
-    Implemented as a window count over ``bucket`` rather than a
-    groupBy + anti-join: the count-then-filter is ONE pass over ``b``
-    (an aggregate branch would evaluate ``b``'s lineage — 2^n_planes
-    interpreted hyperplane dots per vector — a second time), and the
-    hash(bucket) exchange it introduces is exactly the partitioning the
-    candidate equi-join needs next, so no extra shuffle materializes.
-    """
-    w = Window.partitionBy("bucket")
-    return (
-        b.withColumn("_f", F.count(F.lit(1)).over(w))
-        .where(F.col("_f") <= max_bucket)
-        .drop("_f")
-    )
-
-
 def _probe_buckets(n_planes: int, multi_probe: bool) -> Column:
     """Bucket keys to probe for a query vector: its own bucket plus —
     when ``multi_probe`` — every bucket at hamming distance 1 (each
@@ -363,8 +340,9 @@ def lsh_bucket_topk(
     # L2 norms are attached in the SAME Arrow pass as the bucketing:
     # scoring a candidate pair is then a single fold instead of three,
     # and each vector's norm is computed once, not once per pair.
-    b = _cap_hot_buckets(
+    b = GPF.cap_hot_keys(
         lsh_bucket(corpus, n_planes, dim, id_col, vec_col, with_norm=True),
+        ["bucket"],
         max_bucket,
     )
     a = b.select(
@@ -497,8 +475,9 @@ def embedding_near_dup_pairs(
     """
     import numpy as np
 
-    b = _cap_hot_buckets(
+    b = GPF.cap_hot_keys(
         lsh_bucket(corpus, n_planes, dim, id_col, vec_col, with_norm=True),
+        ["bucket"],
         max_bucket,
     )
     id_dt = corpus.schema[id_col].dataType.simpleString()

@@ -46,6 +46,46 @@ def words_col(text: Column) -> Column:
     return F.split(F.trim(text), r"\s+")
 
 
+def word_ngrams(words: Column, n: int, distinct: bool = False) -> Column:
+    """Space-joined n-grams of the word array ``words``, in order:
+    ``gram_i = w[i] ⊕ w[i+1] ⊕ … ⊕ w[i+n-1]``. Fewer than ``n`` words
+    (and a NULL array) yield an empty array; ``distinct`` drops
+    repeated grams (the shingle-set form).
+
+    Built by zipping the array with its k-shifted copies — O(len·n)
+    work per row. The ``transform(starts, i -> concat_ws(slice(w, i,
+    n)))`` formulation re-slices the array per gram (O(len²) copying)
+    and measured 4× slower at sf0.1. ``zip_with`` pads the shorter
+    side with null, which ``concat_ws`` skips; the padded tail is cut
+    by the final ``slice`` to len-(n-1) entries. Narrow (no shuffle).
+    """
+    z = words
+    for k in range(1, n):
+        shifted = F.slice(
+            words, k + 1, F.greatest(F.size(words) - k, F.lit(0))
+        )
+        z = F.zip_with(z, shifted, lambda a, b: F.concat_ws(" ", a, b))
+    grams = F.slice(z, 1, F.size(words) - (n - 1))
+    return F.when(
+        F.size(words) >= n, F.array_distinct(grams) if distinct else grams
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def adjacent_pairs(arr: Column) -> Column:
+    """Adjacent element pairs of ``arr`` as ``array<struct<l, r>>`` —
+    the word bigrams of a word array. Zip of the array with its
+    one-shifted copy, O(len) per row; fewer than 2 elements (and a
+    NULL array) yield an empty array."""
+    return F.when(
+        F.size(arr) >= 2,
+        F.zip_with(
+            F.slice(arr, 1, F.size(arr) - 1),
+            F.slice(arr, 2, F.size(arr) - 1),
+            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
+        ),
+    ).otherwise(F.array())
+
+
 def _bind(arr: Column, fn) -> Column:
     """Evaluate the array expression ``arr`` ONCE per row and hand the
     bound value to ``fn`` as a lambda variable. Higher-order-function
@@ -999,6 +1039,25 @@ def _greedy_merge_rep(rep, l, r):
     return F.replace(rep, search, repl)
 
 
+def _symbol_pairs() -> Column:
+    """Adjacent symbol pairs of the split BPE representation column
+    ``_t`` as ``array<struct<l, r>>`` (empty below 2 symbols). Kept on
+    ``transform(sequence, element_at)`` instead of
+    :func:`adjacent_pairs`: on these short symbol arrays the
+    zip-shift's two slice copies cost more than they save — measured
+    ~11 % slower over the 2.7 M word occurrences of the sf1 corpus
+    (pair count 4.25 vs 4.76 s median, 6 alternating runs)."""
+    return F.when(
+        F.size("_t") >= 2,
+        F.expr(
+            "transform(sequence(1, size(_t) - 1), "
+            "i -> struct("
+            "  element_at(_t, i) AS l, "
+            "  element_at(_t, i + 1) AS r))"
+        ),
+    ).otherwise(F.array())
+
+
 def bpe_learn_merges(
     df: DataFrame,
     k: int = 3,
@@ -1076,15 +1135,7 @@ def bpe_learn_merges(
             "rep", "freq",
             F.split(F.trim(F.col("rep")), "  ").alias("_t"),
         )
-        bigrams = F.when(
-            F.size("_t") >= 2,
-            F.expr(
-                "transform(sequence(1, size(_t) - 1), "
-                "i -> struct("
-                "  element_at(_t, i) AS l, "
-                "  element_at(_t, i + 1) AS r))"
-            ),
-        ).otherwise(F.array())
+        bigrams = _symbol_pairs()
         pairs = (
             arred.select(F.explode(bigrams).alias("p"), "freq")
             .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
@@ -1191,15 +1242,7 @@ def bpe_token_counts(
             "rep", "freq",
             F.split(F.trim(F.col("rep")), "  ").alias("_t"),
         )
-        bigrams = F.when(
-            F.size("_t") >= 2,
-            F.expr(
-                "transform(sequence(1, size(_t) - 1), "
-                "i -> struct("
-                "  element_at(_t, i) AS l, "
-                "  element_at(_t, i + 1) AS r))"
-            ),
-        ).otherwise(F.array())
+        bigrams = _symbol_pairs()
         # The winner must be EXACTLY one row even when a round finds
         # no pairs left to merge: an empty winner would crossJoin the
         # vocabulary down to zero rows and silently drop every
@@ -1355,15 +1398,7 @@ def bpe_token_counts_byte_fallback(
             "rep", "freq_learn",
             F.split(F.trim(F.col("rep")), "  ").alias("_t"),
         )
-        bigrams = F.when(
-            F.size("_t") >= 2,
-            F.expr(
-                "transform(sequence(1, size(_t) - 1), "
-                "i -> struct("
-                "  element_at(_t, i) AS l, "
-                "  element_at(_t, i + 1) AS r))"
-            ),
-        ).otherwise(F.array())
+        bigrams = _symbol_pairs()
         # learn-frequency weighting: encode-only words carry 0 and
         # cannot influence the winner; the global min_by keeps the
         # winner at exactly one row even on an empty round (see
@@ -1416,7 +1451,6 @@ def bigram_surprisal_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     scale: int = 10_000,
-    materialize: bool = False,
 ) -> DataFrame:
     """Per-document mean bigram surprisal under the corpus's own
     bigram LM — the CCNet-style perplexity quality signal: templated
@@ -1472,14 +1506,7 @@ def bigram_surprisal_scores(
     the id set (n_bigrams=0, avg_nll NULL).
     """
     w = words_col(F.lower(F.col(text_col)))
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.zip_with(
-            F.slice(w, 1, F.size(w) - 1),
-            F.slice(w, 2, F.size(w) - 1),
-            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-        ),
-    ).otherwise(F.array())
+    bigrams = adjacent_pairs(w)
     occ = df.select(
         F.col(id_col), F.explode(bigrams).alias("p")
     ).select(id_col, F.col("p.l").alias("l"), F.col("p.r").alias("r"))
@@ -1515,14 +1542,6 @@ def bigram_surprisal_scores(
             .alias("s"),
         )
     )
-    if materialize:
-        # opt-in: pays only across REPEAT executions of the same frame
-        # (the plan has a single consumer, so one-shot runs gain
-        # nothing) — default False (r12) because the cache is never
-        # unpersisted and a lingering corpus-sized block set is
-        # exactly the heap co-tenancy that inflates whatever runs
-        # next in the session (the r11 lesson, see SCALE.md)
-        scored = scored.persist()
     return scored.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_bigrams"),
         F.round(
@@ -1554,14 +1573,7 @@ def bigram_next_words(
     from pyspark.sql import Window
 
     w = words_col(F.lower(F.col(text_col)))
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.zip_with(
-            F.slice(w, 1, F.size(w) - 1),
-            F.slice(w, 2, F.size(w) - 1),
-            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-        ),
-    ).otherwise(F.array())
+    bigrams = adjacent_pairs(w)
     # |distinct bigram types|-sized, consumed by BOTH the totals
     # aggregate and the ranked join — lazy-materialize once so the
     # tokenize+explode pass does not replay per consumer (registry
@@ -1630,14 +1642,7 @@ def pmi_collocations(
     (per-partition heaps, no full sort).
     """
     w = words_col(F.lower(F.col(text_col)))
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.zip_with(
-            F.slice(w, 1, F.size(w) - 1),
-            F.slice(w, 2, F.size(w) - 1),
-            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-        ),
-    ).otherwise(F.array())
+    bigrams = adjacent_pairs(w)
     counts = (
         df.select(F.explode(bigrams).alias("p"))
         .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
@@ -2578,14 +2583,7 @@ def kneser_ney_bigram(
     head × continuations frame).
     """
     w = words_col(F.lower(F.col(text_col)))
-    bigrams = F.when(
-        F.size(w) >= 2,
-        F.zip_with(
-            F.slice(w, 1, F.size(w) - 1),
-            F.slice(w, 2, F.size(w) - 1),
-            lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-        ),
-    ).otherwise(F.array())
+    bigrams = adjacent_pairs(w)
     # |distinct bigram types|-sized and consumed by FOUR structurally
     # different subtrees (fwd, back, tot, the scored join) — without
     # the lazy localCheckpoint each consumer replays the full
@@ -2707,14 +2705,7 @@ def ccnet_perplexity_buckets(
             frame.select(id_col, text_col), text_col
         )
         w = words_col(F.lower(F.col(text_col)))
-        bigrams = F.when(
-            F.size(w) >= 2,
-            F.zip_with(
-                F.slice(w, 1, F.size(w) - 1),
-                F.slice(w, 2, F.size(w) - 1),
-                lambda a, b: F.struct(a.alias("l"), b.alias("r")),
-            ),
-        ).otherwise(F.array())
+        bigrams = adjacent_pairs(w)
         return docs.select(
             F.col(id_col),
             F.col("pred_lang").alias("lang"),
@@ -2818,23 +2809,13 @@ def ccnet_perplexity_buckets(
 
 
 def _ngrams_col(w: Column, n: int) -> Column:
-    """Space-joined word n-grams of a word array (empty below n).
-    The input array is bound once per row (:func:`_bind`) so a
-    computed ``w`` (a split) is not re-evaluated per element."""
+    """Word n-grams of a word array for the BLEU/ROUGE counts; n=1 is
+    the array itself. The input array is bound once per row
+    (:func:`_bind`) so a computed ``w`` (a split) is not re-evaluated
+    per element."""
     if n == 1:
         return w
-    return _bind(
-        w,
-        lambda ws: F.when(
-            F.size(ws) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(ws) - (n - 1)),
-                lambda i: F.concat_ws(
-                    " ", *[F.element_at(ws, i + j) for j in range(n)]
-                ),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
+    return _bind(w, lambda ws: word_ngrams(ws, n))
 
 
 def _clipped_matches(cand: Column, ref: Column) -> Column:

@@ -1,6 +1,7 @@
-"""Session-conf handling of the shared helpers in ``functions``: the
-materialization gate rejects unknown modes, and ``fan_out_if_narrow``
-reads ``maxPartitionBytes`` as Spark does (size strings included)."""
+"""Shared helpers in ``functions``: the materialization gate rejects
+unknown modes, ``fan_out_if_narrow`` reads ``maxPartitionBytes`` as
+Spark does (size strings included), and the hot-key cap keeps a key at
+exactly its cap."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import pytest
 
 from geniepool_etl_spark.functions import (
     MATERIALIZE_CONF,
+    cap_hot_keys,
     ckpt_eager,
     ckpt_lazy,
     fan_out_if_narrow,
@@ -63,3 +65,19 @@ def test_fan_out_reads_size_string_max_partition_bytes(spark, conf, tmp_path):
     out = fan_out_if_narrow(df)
     assert out.rdd.getNumPartitions() == target
     assert sorted(r.id for r in out.collect()) == list(range(100))
+
+
+def test_cap_hot_keys_boundary_and_composite_key(spark):
+    # (a, 1) x3, (b, 1) x4, (a, 2) x4: with cap 3, a key with 3 rows
+    # stays and a key with 4 rows goes
+    rows = [("a", 1)] * 3 + [("b", 1)] * 4 + [("a", 2)] * 4
+    df = spark.createDataFrame(rows, "k STRING, j INT")
+
+    one = cap_hot_keys(df.where("j = 1"), ["k"], 3)
+    assert one.columns == ["k", "j"]
+    assert sorted(tuple(r) for r in one.collect()) == [("a", 1)] * 3
+
+    both = cap_hot_keys(df, ["k", "j"], 3)
+    assert sorted(tuple(r) for r in both.collect()) == [("a", 1)] * 3
+    # on the single key 'k' over all rows, 'a' has 7 rows: nothing stays
+    assert cap_hot_keys(df, ["k"], 3).count() == 0

@@ -8163,6 +8163,45 @@ def test_bleu_rouge_scores(spark):
     assert r["rouge2_f1"] == 0.4
 
 
+def test_word_ngrams_and_adjacent_pairs_edge_texts(spark):
+    """The shared n-gram and pair builders on 0-word, 1-word, n-word
+    and NULL text: below n words (and on NULL) they give an empty
+    array; only the n=1 BLEU/ROUGE grams keep NULL as NULL."""
+    df = spark.createDataFrame(
+        [(0, ""), (1, "solo"), (2, " a b  a b "), (3, None)],
+        "id LONG, text STRING",
+    )
+    w = TX.words_col(F.col("text"))
+    out = {
+        r["id"]: r
+        for r in df.select(
+            "id",
+            TX.word_ngrams(w, 2).alias("g2"),
+            TX.word_ngrams(w, 3).alias("g3"),
+            D.shingle_array(2).alias("sh2"),
+            TX.adjacent_pairs(w).alias("p"),
+            TX._ngrams_col(w, 1).alias("u"),
+            TX._ngrams_col(w, 2).alias("b"),
+        ).collect()
+    }
+    for i in (0, 1, 3):
+        assert out[i]["g2"] == out[i]["g3"] == out[i]["sh2"] == []
+        assert out[i]["p"] == out[i]["b"] == []
+    assert out[0]["u"] == [""] and out[1]["u"] == ["solo"]
+    assert out[3]["u"] is None
+    n = out[2]
+    assert n["g2"] == n["b"] == ["a b", "b a", "a b"]
+    assert n["g3"] == ["a b a", "b a b"]
+    assert n["sh2"] == ["a b", "b a"]
+    assert [(p["l"], p["r"]) for p in n["p"]] == [
+        ("a", "b"), ("b", "a"), ("a", "b")
+    ]
+    grams = D.positioned_ngrams(df, n=3, id_col="id").collect()
+    assert sorted((r["id"], r["pos"], r["gram"]) for r in grams) == [
+        (2, 0, "a b a"), (2, 1, "b a b")
+    ]
+
+
 def test_blocklist_filter(spark):
     """r15: blocklist gate — whole-token matching (substring never
     hits), tier semantics (one block hit drops; flag drops only past

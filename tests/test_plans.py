@@ -157,16 +157,17 @@ def test_phash_band_join_is_keyed(spark):
 
 def test_lsh_hot_buckets_are_capped(spark):
     # the frequency cap must actually bound the candidate buckets: with
-    # a tiny max_bucket every surviving bucket is ≤ the cap, and the
-    # cap is applied via broadcast anti-join (no shuffle of the corpus
-    # for the hot-list).
+    # a tiny max_bucket every surviving bucket is ≤ the cap. The cap is
+    # the shared window count over the bucket key (functions.cap_hot_keys),
+    # whose hash(bucket) exchange the candidate equi-join reuses.
     from pyspark.sql import functions as F
 
+    from geniepool_etl_spark.functions import cap_hot_keys
     from geniepool_etl_spark.operators import similarity as S
 
     emb = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
     cap = 3
-    b = S._cap_hot_buckets(S.lsh_bucket(emb, n_planes=4), max_bucket=cap)
+    b = cap_hot_keys(S.lsh_bucket(emb, n_planes=4), ["bucket"], cap)
     widths = b.groupBy("bucket").agg(F.count(F.lit(1)).alias("n"))
     assert widths.where(F.col("n") > cap).count() == 0
     # and some bucket was actually dropped at this cap (the guard is
